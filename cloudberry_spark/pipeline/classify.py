@@ -1731,16 +1731,16 @@ def ml_text_classifier_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     # score passes, the gradient); materialize it once to scratch
     # parquet (same iterative-state pattern as graph_pagerank — file
     # stats keep AQE broadcast planning intact, unlike .persist()).
-    from cloudberry_spark.pipeline.graph import _materialize
+    from cloudberry_spark.lineage import materialize
 
-    x = _materialize(
+    x = materialize(
         hashed.groupBy(
             "doc_id", (F.col("hh") % 16).cast("int").alias("dim")
         ).agg(
             F.max("y").alias("y"),
             (F.sum(sign) / F.max("ntok")).alias("val"),
         ),
-        spark, sf_dir, "textclf_features",
+        sf_dir, "textclf_features",
     )
     w1 = x.groupBy("dim").agg(
         (-F.sum((0.5 - F.col("y")) * F.col("val")) / n).alias("wt")
@@ -1769,11 +1769,11 @@ def ml_text_classifier_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # w2 (16 rows) feeds BOTH the accuracy readout (inside a broadcast)
     # and the output projection; un-materialized, the whole two-epoch
-    # GD chain over the feature table evaluates twice. localCheckpoint:
+    # GD chain over the feature table evaluates twice. A checkpoint:
     # one job, dimension-table-sized state, lineage truncated.
-    from cloudberry_spark.pipeline.graph import _checkpoint
+    from cloudberry_spark.lineage import checkpoint
 
-    w2 = _checkpoint(w2)
+    w2 = checkpoint(w2)
     acc = scores(w2).agg(
         F.round(
             F.avg(

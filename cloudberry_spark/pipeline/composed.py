@@ -82,11 +82,11 @@ def curate(
         # (~5 logical corpus passes; AQE's ReusedExchange dedups only
         # the band exchange above it). One pass computes the survivors;
         # every branch then reads a columnar file relation with real
-        # size stats. Rebuilt inside fn() on every call
-        # (mode=overwrite in _materialize) — never reused across runs.
-        from cloudberry_spark.pipeline.graph import _materialize
+        # size stats. Rebuilt inside fn() on every call (materialize
+        # overwrites this process's path) — never reused across runs.
+        from cloudberry_spark.lineage import materialize
 
-        s1 = _materialize(s1, spark, sf_dir, "curate_survivors")
+        s1 = materialize(s1, sf_dir, "curate_survivors")
     drops = (
         lsh_candidate_pairs(s1, "doc_id", "text")
         .select(F.col("id_b").alias("doc_id"))

@@ -73,26 +73,6 @@ def words_col(text: Column) -> Column:
     return F.split(F.trim(F.lower(text)), r"\s+")
 
 
-def shingle_hash_arrays(docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    """(id, __sha: array<bigint>): per-document 3-word shingle hashes.
-
-    Fully row-local: words → per-word md5 hash → polynomial combine of
-    each consecutive triple, computed by the Arrow-vectorized kernel
-    (pipeline.hashing.make_arrow_shingle_udf — C md5 on whole batches;
-    bit-identical to the spark_word_hashes/spark_shingle_hashes column
-    expressions, whose HOF lambdas are interpreted per word and were
-    the engine's hottest CPU path). No explode/shuffle happens.
-
-    Pure map-side projection — no fan-out repartition: interleaved
-    A/B at sf0.1/32 cores (r12 opt) showed the Arrow kernel saturates
-    fast enough that an up-front exchange of the text payload costs
-    more than the single-task scan it parallelizes, with fatter tails.
-    """
-    return docs.select(
-        F.col(id_col), _SHINGLE_UDF(F.col(text_col)).alias("__sha")
-    )
-
-
 def exploded_shingle_hashes(
     docs: DataFrame, id_col: str, text_col: str
 ) -> DataFrame:
@@ -968,7 +948,7 @@ def dedup_edit_distance_verify(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("pipeline", "dedup", "incremental"),
 )
 def dedup_incremental_index_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from cloudberry_spark.pipeline.graph import _materialize
+    from cloudberry_spark.lineage import materialize
 
     docs = load_table(spark, sf_dir, "documents")
     # The standing index, ONE Arrow pass + ONE materialization per run
@@ -980,7 +960,7 @@ def dedup_incremental_index_probe(spark: SparkSession, sf_dir: str) -> DataFrame
     # probe bands, Jaccard-verify shingle sets) derives map-side from
     # the scratch table. At scale this IS the standing index layout:
     # shingle sets for verify next to signatures for banding.
-    sig = _materialize(
+    sig = materialize(
         docs.select(
             "doc_id", _SHINGLE_SIG_UDF(F.col("text")).alias("__s")
         ).select(
@@ -988,7 +968,7 @@ def dedup_incremental_index_probe(spark: SparkSession, sf_dir: str) -> DataFrame
             F.col("__s.sha").alias("sha"),
             *[F.col(f"__s.mh{i}").alias(f"mh{i}") for i in range(N_HASHES)],
         ),
-        spark, sf_dir, "dedup_shingle_sig_index",
+        sf_dir, "dedup_shingle_sig_index",
     )
     batch = docs.filter(F.col("doc_id") % 2 == 1)
     index = lsh_bands(sig.filter(F.col("doc_id") % 2 == 0), "doc_id")

@@ -25,66 +25,15 @@ Edges derive from the fixtures: customer→supplier from co-occurring
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
 from cloudberry_spark.catalog import load_table
+from cloudberry_spark.lineage import materialize
 from cloudberry_spark.registry import register
 
 #: PageRank damping factor (the canonical 0.85) and iteration count.
 PR_DAMPING = 0.85
-
-def _materialize(df, spark, sf_dir: str, tag: str):
-    """Materialize an iteration-invariant derived table to scratch
-    parquet and read it back. Compared with .persist(): the lineage is
-    truncated the same way, but the planner sees a real file relation
-    with exact size statistics (so AQE's broadcast decisions behave
-    exactly as they would for any table), re-runs are deterministic, and
-    nothing pins executor memory. This is the matview pattern every
-    iterative operator here uses for its derived graph/features.
-    """
-    from cloudberry_spark import planhook
-    from cloudberry_spark.sources.external import _scratch
-    from cloudberry_spark.sql.scale_fixture import _sweep_stale_pid_dirs
-
-    # Per-PID scratch dir: concurrent processes at the same SF (test
-    # shards, parallel bench invocations) must never overwrite a path
-    # another process is mid-read on (FAILED_READ_FILE otherwise).
-    # Same keying + dead-PID sweep as the spec fixture views
-    # (sql/scale_fixture.py); nothing is reused across invocations —
-    # every call still rewrites its own path with mode=overwrite.
-    base = _scratch(sf_dir, f"matpid{os.getpid()}")
-    _sweep_stale_pid_dirs(os.path.dirname(base), "matpid")
-    path = os.path.join(base, tag)
-    # the final plan only shows the post-materialization read; record
-    # this step's plan so tools/plan_report.py counts the real work
-    planhook.record(df)
-    # coalesce: these state tables are node/edge-list sized; writing 32
-    # near-empty files per round costs more task/commit overhead than
-    # the data. At cluster scale pick partitions ~ |state| / 128MB.
-    df.coalesce(8).write.mode("overwrite").parquet(path)
-    return spark.read.parquet(path)
-
-
-def _checkpoint(df):
-    """Materialize SMALL iteration state in executor memory
-    (localCheckpoint): same lineage truncation as scratch parquet, one
-    job, no write+read round-trip. Use for per-round state that is
-    node-table sized and referenced more than once; keep scratch
-    parquet (_materialize) for the big iteration-invariant relations,
-    where the planner needs real file-size statistics for its join
-    decisions. On a cluster, set SPARK_GRAFT_CHECKPOINT_DIR (session.py)
-    and switch to reliable checkpoints if executor loss must not
-    recompute a round."""
-    from cloudberry_spark import planhook
-
-    planhook.record(df)
-    return df.localCheckpoint(eager=True)
-
-
 PR_ITERS = 3
 
 
@@ -166,14 +115,14 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     # scanned edges in ONE task (47 MB < maxPartitionBytes): iterations
     # went 12.3s -> 16.6-18s at sf1. String-keyed distinct keeps the
     # fileset wide enough to parallelize the per-iteration scans.
-    edges = _materialize(
+    edges = materialize(
         o.join(li, o["o_orderkey"] == li["l_orderkey"])
         .select(
             F.concat(F.lit("c:"), F.col("o_custkey")).alias("src"),
             F.concat(F.lit("s:"), F.col("l_suppkey")).alias("dst"),
         )
         .distinct(),
-        spark, sf_dir, "pagerank_edges",
+        sf_dir, "pagerank_edges",
     )
     # Fold the out-degree INTO the node/rank state (deg, NULL for
     # dangling): each iteration is then ONE edges⋈ranks join instead of
@@ -188,13 +137,13 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the distinct dsts (dangling, deg NULL): one narrow distinct over
     # dst replaces the 2|E|-row union-distinct AND the left join back
     # to outdeg (r13 §11; row-identical by the disjointness argument).
-    nodes = _materialize(
+    nodes = materialize(
         outdeg.unionByName(
             edges.select(F.col("dst").alias("node"))
             .distinct()
             .withColumn("deg", F.lit(None).cast("double"))
         ),
-        spark, sf_dir, "pagerank_nodes",
+        sf_dir, "pagerank_nodes",
     )
     n = float(nodes.count())
     ranks = nodes.withColumn("pr", F.lit(1.0 / n))
@@ -238,8 +187,8 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         # are read exactly once (the final top-k), so that round
         # skips the write+read round-trip.
         if _i < PR_ITERS - 1:
-            new_ranks = _materialize(
-                new_ranks, spark, sf_dir, f"pagerank_ranks_{_i}"
+            new_ranks = materialize(
+                new_ranks, sf_dir, f"pagerank_ranks_{_i}"
             )
         ranks = new_ranks
     return (
@@ -486,11 +435,11 @@ def graph_kcore_peel(spark: SparkSession, sf_dir: str) -> DataFrame:
     # persist: the wedge self-join is the expensive derivation and every
     # peel round's lineage branches off it (same iterative-state pattern
     # as graph_pagerank — materialize the derived graph, iterate on it)
-    edges = _materialize(
+    edges = materialize(
         a.join(b, (F.col("a.p") == F.col("b.p")) & (F.col("a.s") < F.col("b.s")))
         .select(F.col("a.s").alias("u"), F.col("b.s").alias("v"))
         .distinct(),
-        spark, sf_dir, "kcore_edges",
+        sf_dir, "kcore_edges",
     )
     nodes = edges.select(F.col("u").alias("node")).union(
         edges.select("v")
@@ -506,8 +455,8 @@ def graph_kcore_peel(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select("node")
         )
 
-    surv = _materialize(
-        degree_filter(edges), spark, sf_dir, "kcore_surv_0"
+    surv = materialize(
+        degree_filter(edges), sf_dir, "kcore_surv_0"
     )
     first = surv.agg(F.count(F.lit(1)).alias("survivors_round0"))
     es = edges
@@ -517,12 +466,12 @@ def graph_kcore_peel(spark: SparkSession, sf_dir: str) -> DataFrame:
         # es and surv both feed two consumers per round: truncate the
         # peel state each round or the lazy chain replays exponentially
         # (same reasoning as graph_pagerank's per-round rank tables).
-        es = _materialize(
+        es = materialize(
             es.join(su, "u", "left_semi").join(sv, "v", "left_semi"),
-            spark, sf_dir, f"kcore_es_{_r}",
+            sf_dir, f"kcore_es_{_r}",
         )
-        surv = _materialize(
-            degree_filter(es), spark, sf_dir, f"kcore_surv_{_r + 1}"
+        surv = materialize(
+            degree_filter(es), sf_dir, f"kcore_surv_{_r + 1}"
         )
     return (
         surv.agg(F.count(F.lit(1)).alias("survivors_final"))

@@ -49,12 +49,6 @@ def bpe_ish_token_count(text: Column) -> Column:
     return F.size(F.filter(pieces, lambda p: F.length(p) > 0))
 
 
-def stopword_ratio(text: Column, lang: str) -> Column:
-    stops = F.array(*[F.lit(w) for w in STOPWORDS[lang]])
-    t = tokens(text)
-    return F.size(F.filter(t, lambda w: F.array_contains(stops, w))) / F.size(t)
-
-
 @register(
     "text_token_stats",
     oracle="""
@@ -1396,7 +1390,7 @@ def text_inverted_index_search(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from pyspark.sql.window import Window
 
-    from cloudberry_spark.sources.external import _scratch
+    from cloudberry_spark.lineage import scratch_path
 
     def _bucket_col(c):
         # md5-prefix bucket: computable identically driver-side (for
@@ -1410,7 +1404,7 @@ def text_inverted_index_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     TERMS = ["scan", "filter", "vector"]
     K1, B = 1.2, 0.75
     N_BUCKETS = 32
-    root = _scratch(sf_dir, "text_inv_index")
+    root = scratch_path(sf_dir, "text_inv_index")
     postings_p = os.path.join(root, "postings")
     dl_p = os.path.join(root, "doclen")
     stats_p = os.path.join(root, "stats")

@@ -457,40 +457,37 @@ _DRIVER_SAMPLED = frozenset(
 #: round may appear here before their module lands — rank lookups are
 #: by name, so unknown names are inert.
 _LEAD: list[str] = [
-        # round-13 driver-sample leads. First, the two round-12 oracle
-        # failures FIXED this round (VERDICT item 1) — the r13 sample
-        # must confirm them externally:
-        "regress_tstz_at_time_zone_dst",
-        "regress_dqa_grouping_sets",
-        # then the never-sampled queries whose INTERNALS this
-        # optimization round changed (curate() materialization; the
-        # Arrow dot/cosine/l2 kernels replacing the interpreted HOF
-        # folds; the IVF-PQ pivoted-codes/broadcast-ADC restructure):
-        "pipeline_end_to_end",
-        "pipeline_curate_to_shards",
-        "sim_ivf_multiprobe",
-        "sim_cosine_neardup",
-        "sim_semdedup_clusters",
-        "sim_kmeans_index_build",
-        "sim_embedding_outliers",
-        "ml_kmeans_silhouette",
-        "ml_knn_classifier",
-        "emb_matryoshka_recall",
-        # remaining high-value never-sampled heads: the other composed
-        # pipeline readouts and the streaming/IVM + multimodal families
-        # now carrying bench entries:
-        "ivm_join_view_refresh",
-        "stream_tumbling_daily",
-        "multimodal_metadata_stats",
-        # §11 continuation: the queries whose internals the second
-        # session changed (vectorized decode kernel; one-scan IVM
-        # seeds) — external confirmation wanted, same rule as above:
-        "multimodal_decode_features",
-        "ivm_incremental_refresh",
-        "ivm_count_distinct_refresh",
+    # round-13 driver-sample leads. First, the two round-12 oracle
+    # failures FIXED this round (VERDICT item 1) — the r13 sample
+    # must confirm them externally:
+    "regress_tstz_at_time_zone_dst",
+    "regress_dqa_grouping_sets",
+    # then the never-sampled queries whose INTERNALS this
+    # optimization round changed (curate() materialization; the
+    # IVF-PQ pivoted-codes/broadcast-ADC restructure):
+    "pipeline_end_to_end",
+    "pipeline_curate_to_shards",
+    "sim_ivf_multiprobe",
+    "sim_cosine_neardup",
+    "sim_semdedup_clusters",
+    "sim_kmeans_index_build",
+    "sim_embedding_outliers",
+    "ml_kmeans_silhouette",
+    "ml_knn_classifier",
+    "emb_matryoshka_recall",
+    # remaining high-value never-sampled heads: the other composed
+    # pipeline readouts and the streaming/IVM + multimodal families
+    # now carrying bench entries:
+    "ivm_join_view_refresh",
+    "stream_tumbling_daily",
+    "multimodal_metadata_stats",
+    # §11 continuation: the queries whose internals round 13 later
+    # changed (vectorized decode kernel; one-scan IVM seeds) —
+    # external confirmation wanted, same rule as above:
+    "multimodal_decode_features",
+    "ivm_incremental_refresh",
+    "ivm_count_distinct_refresh",
 ]
-
-
 
 
 def interleaved_queries() -> dict[str, Query]:

@@ -27,7 +27,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from cloudberry_spark.registry import register
 from cloudberry_spark.sources.dirtable import DirectoryTable
-from cloudberry_spark.sources.external import _scratch
+from cloudberry_spark.lineage import scratch_path
 
 #: relative_path -> (payload, tag)
 FIXTURE_FILES = {
@@ -41,7 +41,7 @@ FIXTURE_FILES = {
 
 
 def _dt(spark: SparkSession, sf_dir: str, name: str) -> DirectoryTable:
-    dt = DirectoryTable(spark, name, _scratch(sf_dir, f"dirtable/{name}"))
+    dt = DirectoryTable(spark, name, scratch_path(sf_dir, f"dirtable/{name}"))
     for rel, (payload, tag) in FIXTURE_FILES.items():
         dt.copy_binary(payload, rel, tag=tag)
     return dt

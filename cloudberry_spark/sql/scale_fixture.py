@@ -82,17 +82,18 @@ def spec_views(spark, prelude: str, tag: str) -> None:
     Since the r12 optimization round this also serves K=1: every spec
     query otherwise re-parses + re-analyzes the ~19KB inline prelude
     per call — measured 25-30% of each call. At K=1 the build dir is
-    keyed by PID so EVERY process rebuilds the fixture from its
-    generators once (no cross-invocation reuse of intermediates);
-    concurrent processes (test shards) can never race on one path.
+    this process's scratch path (lineage.scratch_path) so EVERY process
+    rebuilds the fixture from its generators once (no cross-invocation
+    reuse of intermediates); concurrent processes (test shards) can
+    never race on one path.
     """
     global _CTE_NAME_RE
     import os
     import re
 
-    from cloudberry_spark.sql.pgcompat import translate_pg_sql
-
+    from cloudberry_spark import lineage
     from cloudberry_spark.catalog import VIEW_OWNER
+    from cloudberry_spark.sql.pgcompat import translate_pg_sql
 
     k = scale_factor()
     me = (f"spec:{tag}:k{k}", spark)
@@ -108,14 +109,16 @@ def spec_views(spark, prelude: str, tag: str) -> None:
     needed = [t for t in names if VIEW_OWNER.get(t) != me]
     if not needed:
         return
-    scratch = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.dirname(__file__))),
-        ".scratch")
     if k == 1:
-        base = os.path.join(scratch, f"spec_{tag}_k1_pid{os.getpid()}")
-        _sweep_stale_pid_dirs(scratch, f"spec_{tag}_k1_pid")
+        # generated from the spec text, not read from an SF dir: the
+        # fixture is its own data set, "spec"
+        base = lineage.scratch_path("spec", f"{tag}_k1")
     else:
-        base = os.path.join(scratch, f"spec_{tag}_k{k}")
+        # The one cross-process cache: a K>1 soak fixture costs minutes
+        # to build and every build is identical, so the soak's
+        # processes share it under the root instead of rebuilding it
+        # each. A table is rebuilt only while its _SUCCESS is missing.
+        base = os.path.join(lineage.ROOT, f"spec_{tag}_k{k}")
     for t in needed:
         path = os.path.join(base, t)
         if not os.path.exists(os.path.join(path, "_SUCCESS")):
@@ -130,21 +133,3 @@ def spec_views(spark, prelude: str, tag: str) -> None:
         rdf.createOrReplaceTempView(t)
         VIEW_OWNER[t] = me
 
-
-def _sweep_stale_pid_dirs(scratch: str, prefix: str) -> None:
-    """Best-effort cleanup of per-PID spec fixture dirs left by dead
-    processes (a killed run cannot clean up after itself)."""
-    import os
-    import shutil
-
-    try:
-        for e in os.listdir(scratch):
-            if not e.startswith(prefix):
-                continue
-            pid = e[len(prefix):]
-            if not pid.isdigit() or int(pid) == os.getpid():
-                continue
-            if not os.path.exists(f"/proc/{pid}"):
-                shutil.rmtree(os.path.join(scratch, e), ignore_errors=True)
-    except OSError:
-        pass

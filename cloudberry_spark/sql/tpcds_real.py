@@ -52,6 +52,7 @@ import re
 
 from pyspark.sql import DataFrame, SparkSession
 
+from cloudberry_spark.lineage import materialize
 from cloudberry_spark.operators.rewrites import rewrite_selfjoin_distinct_in
 from cloudberry_spark.registry import register
 from cloudberry_spark.sql.pgcompat import translate_pg_sql
@@ -418,30 +419,9 @@ def _with_prelude(sql: str, prelude: str | None = None) -> str:
     return base + ",\n" + sql[m.end():]
 
 
-def _split_single_cte(sql: str) -> tuple[str, str, str] | None:
-    """For the ``WITH <name> AS ( <body> ) <rest>`` single-CTE shape,
-    return (name, body, rest); None for anything else."""
-    m = re.match(r"\s*with\s+(\w+)\s+as\s*\(", sql, flags=re.I)
-    if not m:
-        return None
-    depth, i = 1, m.end()
-    while i < len(sql) and depth:
-        if sql[i] == "(":
-            depth += 1
-        elif sql[i] == ")":
-            depth -= 1
-        i += 1
-    if depth:
-        return None
-    body, rest = sql[m.end(): i - 1], sql[i:]
-    if re.match(r"\s*,", rest):  # a second CTE follows: not this shape
-        return None
-    return m.group(1), body, rest
-
-
 def materialize_hot_cte(
-    spark: SparkSession, sql: str, prelude: str | None, min_refs: int = 3,
-    qname: str = "shared",
+    spark: SparkSession, sf_dir: str, sql: str, prelude: str | None,
+    qname: str,
 ) -> DataFrame | None:
     """Build many-referenced CTEs ONCE as scratch-parquet temp views
     and run the remainder against them (the year_total q04/q11/q74
@@ -451,11 +431,9 @@ def materialize_hot_cte(
     176-exchange plan. The reference materializes shared CTEs once
     per slice; this is that plan, and at 100 TB the only survivable
     one). Handles multi-CTE texts by peeling leading CTEs in order:
-    each with >= min_refs references downstream is materialized, the
-    rest stay inline. Returns None when nothing qualifies, leaving
-    the inline path untouched."""
-    import os
-
+    each with >= 3 references downstream is materialized, the rest
+    stay inline. Returns None when nothing qualifies, leaving the
+    inline path untouched."""
     kept: list[tuple[str, str]] = []
     made = 0
     remaining = sql
@@ -483,19 +461,16 @@ def materialize_hot_cte(
         dependent = any(
             re.search(rf"\b{k}\b", body, flags=re.I) for k, _ in kept
         )
-        if refs >= min_refs and not dependent:
+        if refs >= 3 and not dependent:
             df = spark.sql(translate_pg_sql(_with_prelude(body, prelude)))
-            # Key the scratch path AND the temp-view name by query so
+            # Key the scratch tag AND the temp-view name by query so
             # q04/q11/q74 (which share the CTE name year_total but not
             # its definition) can never read each other's
-            # materialization, and parallel runs don't race on one
-            # path (ADVICE r10).
+            # materialization (ADVICE r10).
             view = f"{qname}__{cte}"
-            path = os.path.join(
-                os.path.dirname(os.path.dirname(os.path.dirname(__file__))),
-                ".scratch", "cte_materialized", qname, cte)
-            df.write.mode("overwrite").parquet(path)
-            spark.read.parquet(path).createOrReplaceTempView(view)
+            materialize(
+                df, sf_dir, f"cte_materialized/{qname}/{cte}"
+            ).createOrReplaceTempView(view)
             # downstream TABLE references retarget to the per-query
             # view (later CTE bodies included). Qualified column refs
             # (q04's t_s_firstyear.year_total — the CTE exposes a
@@ -525,7 +500,7 @@ def register_tpcds(
     variant for q69/q76); override queries always run CTE-inline —
     the scale soak's parquet views materialize the SHARED prelude.
     ``materialize_cte`` opts the year_total-class texts into
-    materialize_hot_cte (build-once plan for a CTE referenced >= 4
+    materialize_hot_cte (build-once plan for a CTE referenced >= 3
     times). ``rewrite`` (str -> str) transforms the SPARK-side text
     only — the oracle always runs the verbatim spec text, so the
     driver hash-verifies the rewrite is semantics-preserving (the
@@ -555,12 +530,12 @@ def register_tpcds(
             spec_views(spark, TPCDS_PRELUDE, "tpcds")
             if materialize_cte:
                 # empty prelude: the tables already exist as views
-                out = materialize_hot_cte(spark, _orig, "", qname=name)
+                out = materialize_hot_cte(spark, sf_dir, _orig, "", name)
                 if out is not None:
                     return out
             return spark.sql(translate_pg_sql(_orig))
         if materialize_cte:
-            out = materialize_hot_cte(spark, _orig, prelude, qname=name)
+            out = materialize_hot_cte(spark, sf_dir, _orig, prelude, name)
             if out is not None:
                 return out
         return spark.sql(translate_pg_sql(_sql))
@@ -1203,16 +1178,13 @@ limit 100
     tags=("tpcds_real", "q4", "cte_sharing"),
 )
 def tpcds_q04_shared_cte(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from cloudberry_spark.sources.external import _scratch
-
     src = _TPCDS_Q04_TEXT
     head = src.index(_Q4_YT_HEAD)
     tail = src.index(_Q4_TAIL_MARK)
     yt_sql = src[head + len(_Q4_YT_HEAD): src.rindex(")", 0, tail)]
     yt = spark.sql(translate_pg_sql(_with_prelude(yt_sql)))
-    path = _scratch(sf_dir, "tpcds_q04_year_total")
-    yt.write.mode("overwrite").parquet(path)
-    spark.read.parquet(path).createOrReplaceTempView("year_total")
+    materialize(yt, sf_dir, "tpcds_q04_year_total").createOrReplaceTempView(
+        "year_total")
     return spark.sql(translate_pg_sql(src[tail:]))
 
 

@@ -261,11 +261,11 @@ def regress_ugp_update_returning_except(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     from cloudberry_spark.operators.dml import update_table
-    from cloudberry_spark.sources.external import _scratch
+    from cloudberry_spark.lineage import scratch_path
     from cloudberry_spark.sources.snapshot import SnapshotTable
 
     r = spark.range(1, 11).selectExpr("CAST(id AS INT) AS a")
-    st = SnapshotTable.init(_scratch(sf_dir, "ugp_r1240"), r)
+    st = SnapshotTable.init(scratch_path(sf_dir, "ugp_r1240"), r)
     update_table(
         spark, st, F.col("a") < 5, {"a": F.col("a") + F.lit(1)}
     )

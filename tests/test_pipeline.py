@@ -240,14 +240,25 @@ def test_row_ids_unique_and_dense(spark):
 
 def test_connected_components_uses_reliable_checkpoint_when_dir_set(spark, tmp_path):
     """With a checkpoint dir configured (the production posture),
-    _truncate_lineage must take the reliable checkpoint() path — the
-    lineage survives executor loss — and the result must be unchanged."""
+    lineage.checkpoint — called directly and inside connected_components
+    — must take the reliable checkpoint() path (the lineage survives
+    executor loss), and the results must be unchanged."""
+    import glob as _glob
+
+    from cloudberry_spark.lineage import checkpoint
     from cloudberry_spark.pipeline.components import connected_components
 
     sc = spark.sparkContext
     assert sc.getCheckpointDir() is None
+    rdds = str(tmp_path / "ckpt") + "/*/rdd-*"
     try:
         sc.setCheckpointDir(str(tmp_path / "ckpt"))
+        got = checkpoint(spark.range(4))
+        # reliable checkpoint files actually landed in the dir
+        n_direct = len(_glob.glob(rdds))
+        assert n_direct >= 1
+        assert sorted(r.id for r in got.collect()) == [0, 1, 2, 3]
+
         nodes = spark.createDataFrame([(i,) for i in range(6)], ["id"])
         edges = spark.createDataFrame([(0, 1), (1, 2), (4, 5)], ["id_a", "id_b"])
         got = {
@@ -255,10 +266,7 @@ def test_connected_components_uses_reliable_checkpoint_when_dir_set(spark, tmp_p
             for r in connected_components(nodes, edges, "id").collect()
         }
         assert got == {0: 0, 1: 0, 2: 0, 3: 3, 4: 4, 5: 4}
-        # reliable checkpoint files actually landed in the dir
-        import glob as _glob
-
-        assert _glob.glob(str(tmp_path / "ckpt") + "/*")
+        assert len(_glob.glob(rdds)) > n_direct
     finally:
         # SparkContext.setCheckpointDir(null) clears it (Option(null)=None)
         sc._jsc.setCheckpointDir(None)
@@ -355,84 +363,54 @@ def test_arrow_hash_kernels_match_column_expressions(spark):
     assert mh.where(cond).count() == 0
 
 
-def test_arrow_fold_kernels_match_column_expressions(spark):
-    """The Arrow dot/cosine/l2 kernels (similarity hot path since the
-    r13 optimization round) must be bit-identical to the Catalyst HOF
-    fold expressions they replaced, over every (query, corpus) pair of
-    the fixture embeddings — float comparison with strict equality, no
-    rounding (the same bar the driver's hash comparator sets)."""
-    from pyspark.sql import functions as F
-
-    from cloudberry_spark.catalog import load_table
-    from cloudberry_spark.pipeline.similarity import (
-        _ARROW_COS,
-        _ARROW_DOT,
-        _ARROW_L2SQ,
-        cosine_expr,
-        dot_expr,
-        norm_expr,
-    )
-    from tests.conftest import SF_DIR
-
-    emb = load_table(spark, SF_DIR, "embeddings")
-    q = emb.where(F.col("vec_id") < 10).select(
-        F.col("vec_id").alias("qid"), F.col("embedding").alias("q_emb")
-    )
-    pairs = emb.crossJoin(F.broadcast(q))
-
-    l2_expr = F.aggregate(
-        F.zip_with(
-            F.transform("embedding", lambda x: x.cast("double")),
-            F.transform("q_emb", lambda x: x.cast("double")),
-            lambda a, b: (a - b) * (a - b),
-        ),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    checked = pairs.select(
-        _ARROW_DOT("embedding", "q_emb").alias("kd"),
-        dot_expr(F.col("embedding"), F.col("q_emb")).alias("ed"),
-        _ARROW_COS("embedding", "q_emb").alias("kc"),
-        cosine_expr(F.col("embedding"), F.col("q_emb")).alias("ec"),
-        _ARROW_L2SQ("embedding", "q_emb").alias("kl"),
-        l2_expr.alias("el"),
-        F.sqrt(_ARROW_DOT("embedding", "embedding")).alias("kn"),
-        norm_expr(F.col("embedding")).alias("en"),
-    )
-    bad = checked.where(
-        (F.col("kd") != F.col("ed"))
-        | (F.col("kc") != F.col("ec"))
-        | (F.col("kl") != F.col("el"))
-        | (F.col("kn") != F.col("en"))
-        | F.col("kd").isNull()
-        | F.col("kc").isNull()
-        | F.col("kl").isNull()
-    ).count()
-    assert bad == 0
-
-
-def test_materialize_scratch_path_is_per_process(spark, tmp_path):
+def test_materialize_scratch_path_is_per_process(spark, tmp_path, monkeypatch):
     """Concurrent processes at the same SF (test shards, parallel bench
-    invocations) must not overwrite each other's scratch
-    materializations mid-read: the path is keyed by PID, and a second
-    call with the same tag rewrites (not appends) its own path."""
+    invocations) must not overwrite each other's scratch data mid-read:
+    scratch_path is keyed by PID, and materialize rewrites (not appends)
+    its own path. A process's first scratch_path call sweeps the dirs of
+    dead processes and keeps live PIDs' dirs and non-PID entries (such
+    as the sf1 tables under .scratch/sf1)."""
     import os
-
-    from cloudberry_spark.pipeline.graph import _materialize
-    from cloudberry_spark.sources.external import _scratch
-
-    df = spark.range(5).withColumnRenamed("id", "v")
-    out = _materialize(df, spark, str(tmp_path / "sfX"), "ppid_probe")
-    assert out.count() == 5
-    base = _scratch(str(tmp_path / "sfX"), f"matpid{os.getpid()}")
-    path = os.path.join(base, "ppid_probe")
-    assert os.path.exists(os.path.join(path, "_SUCCESS"))
-    # overwrite semantics: a second call with different data replaces
-    out2 = _materialize(
-        spark.range(3).withColumnRenamed("id", "v"),
-        spark, str(tmp_path / "sfX"), "ppid_probe",
-    )
-    assert out2.count() == 3
     import shutil
+    import subprocess
+    import sys
 
-    shutil.rmtree(path, ignore_errors=True)
+    from cloudberry_spark import lineage
+
+    sf = str(tmp_path / f"sfX{os.getpid()}")
+    sf_root = os.path.join(lineage.ROOT, os.path.basename(sf))
+    try:
+        path = lineage.scratch_path(sf, "ppid_probe")
+        assert path == os.path.join(sf_root, f"pid{os.getpid()}", "ppid_probe")
+        other = subprocess.run(
+            [sys.executable, "-c",
+             "import sys; from cloudberry_spark.lineage import scratch_path;"
+             " print(scratch_path(sys.argv[1], 'ppid_probe'))", sf],
+            capture_output=True, text=True, check=True,
+            cwd=os.path.dirname(lineage.ROOT),
+        ).stdout.strip()
+        assert os.path.dirname(other) != os.path.dirname(path)
+        assert os.path.basename(os.path.dirname(other)).startswith("pid")
+
+        out = lineage.materialize(
+            spark.range(5).withColumnRenamed("id", "v"), sf, "ppid_probe")
+        assert out.count() == 5
+        assert os.path.exists(os.path.join(path, "_SUCCESS"))
+        # overwrite semantics: a second call with different data replaces
+        out2 = lineage.materialize(
+            spark.range(3).withColumnRenamed("id", "v"), sf, "ppid_probe")
+        assert out2.count() == 3
+
+        # 4194305 is above Linux's PID_MAX_LIMIT: never a live process
+        dead = os.path.join(sf_root, "pid4194305")
+        live = os.path.join(sf_root, f"pid{os.getppid()}")
+        table = os.path.join(sf_root, "lineitem.parquet")
+        for d in (dead, live, table):
+            os.makedirs(d, exist_ok=True)
+        monkeypatch.setattr(lineage, "_swept_pid", None)
+        assert lineage.scratch_path(sf, "ppid_probe") == path
+        assert not os.path.exists(dead)
+        assert os.path.isdir(live) and os.path.isdir(table)
+        assert os.path.exists(os.path.join(path, "_SUCCESS"))
+    finally:
+        shutil.rmtree(sf_root, ignore_errors=True)

@@ -22,7 +22,7 @@ import pytest
 
 OUT = "/root/reference/src/test/regress/expected/qp_olap_windowerr.out"
 
-pytestmark = pytest.mark.skipif(
+needs_corpus = pytest.mark.skipif(
     not os.path.exists(OUT), reason="reference corpus not mounted"
 )
 
@@ -93,12 +93,12 @@ def _parse_corpus() -> list[tuple[str, bool]]:
     return [(s, bool(e)) for s, e in out if e is not None]
 
 
-_CORPUS = _parse_corpus()
-_ERRORS = [s for s, e in _CORPUS if e]
-#: deterministic spread over the error corpus
+#: deterministic spread over the error corpus (empty when not mounted)
+_ERRORS = [s for s, e in _parse_corpus() if e] if os.path.exists(OUT) else []
 _SLICE = _ERRORS[:: max(1, len(_ERRORS) // 40)][:40]
 
 
+@needs_corpus
 def test_corpus_classification_counts():
     """The .out parse must recover the corpus's published shape: 292
     ERROR statements (the count greps straight from the file)."""
@@ -111,6 +111,7 @@ def test_corpus_classification_counts():
     )
 
 
+@needs_corpus
 @pytest.mark.parametrize(
     "stmt", _SLICE, ids=[f"err{i:03d}" for i in range(len(_SLICE))]
 )

@@ -300,12 +300,14 @@ def main() -> None:
     print("Generated by tools/plan_report.py. Every hash exchange is a full")
     print("shuffle of its input; BHJ = broadcast hash join (dim never moves")
     print("the fact), SMJ = sort-merge join, codegen = whole-stage spans.")
-    print("Iterative operators that materialize scratch state (pagerank,")
-    print("k-core, text-classifier features) report the SUM across every")
-    print("materialization step plus the final plan; `steps` counts the")
-    print("intermediate materializations (0 = single-plan query). Step")
-    print("plans are AQE-initial (the write runs its own execution), so")
-    print("an SMJ counted in a step may still demote to BHJ at runtime.\n")
+    print("Operators that cut lineage (lineage.materialize: pagerank,")
+    print("k-core, text-classifier features, shared CTEs;")
+    print("lineage.checkpoint: recursive fixpoints, connected components)")
+    print("report the SUM across every step plus the final plan; `steps`")
+    print("counts the intermediate materializations and checkpoints")
+    print("(0 = single-plan query). Step plans are AQE-initial (the step")
+    print("runs its own execution), so an SMJ counted in a step may still")
+    print("demote to BHJ at runtime.\n")
     print("| query | hash ex. | bcast | BHJ | SMJ | codegen spans | pushed filters | steps |")
     print("|---|---|---|---|---|---|---|---|")
     for name in names:
